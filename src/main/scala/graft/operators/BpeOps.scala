@@ -144,8 +144,6 @@ object BpeOps {
       (SparkSession, String, Int),
       (Seq[(Int, String, String, Long)], DataFrame)]()
 
-  private[graft] def clearLearnerMemo(): Unit = learnerMemo.clear()
-
   private[graft] def learnedForDir(spark: SparkSession, dir: String,
       merges: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
     Memos.purgeStopped(learnerMemo)

@@ -130,10 +130,6 @@ object ClusterOps {
     new java.util.concurrent.ConcurrentHashMap[
       (SparkSession, String, Int, Int), DataFrame]()
 
-  private[graft] def clearCentroidMemo(): Unit = {
-    centroidMemo.clear(); shortlistMemo.clear(); clearAuditRefMemo()
-  }
-
   private[graft] def corpusCentroids(spark: SparkSession, dir: String,
       k: Int, iters: Int): DataFrame = {
     Memos.purgeStopped(centroidMemo)
@@ -529,8 +525,6 @@ object ClusterOps {
   private val auditRefMemo =
     new java.util.concurrent.ConcurrentHashMap[
       (SparkSession, String, String), DataFrame]()
-
-  private[graft] def clearAuditRefMemo(): Unit = auditRefMemo.clear()
 
   private def auditRef(spark: SparkSession, dir: String, kind: String,
       params: String)(build: => DataFrame): DataFrame = {

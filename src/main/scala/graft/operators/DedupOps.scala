@@ -22,26 +22,6 @@ object DedupOps {
   private def docs(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "documents")
 
-  /** Spread an UNSPLITTABLE input across the executors before
-    * CPU-heavy per-row work (shingle/minhash hashing): the test
-    * corpus is one single-row-group parquet file — the same shape as
-    * a gzip text input at production scale — so the scan yields ONE
-    * partition and every downstream hash runs single-threaded unless
-    * explicitly redistributed. The shuffle moves only the raw doc
-    * rows (kilobytes here; one pass of the input at any scale),
-    * against a 32× parallelism unlock for the hashing above it. Only
-    * the hash-heavy pipelines call this, right below their scan,
-    * where the per-row compute dominates the row movement — and since
-    * r14 it delegates to the CONDITIONAL [[graft.sources.Tables.spread]]:
-    * an already-split source (the cluster-scale case) passes through
-    * with no exchange at all, instead of paying a wasted full-corpus
-    * round-robin. */
-  private def spread(df: DataFrame): DataFrame =
-    graft.sources.Tables.spread(df)
-
-  private def parallelism(df: DataFrame): Int =
-    df.sparkSession.sparkContext.defaultParallelism
-
   /** Exact duplicate summary: hash-groupBy on full text. */
   def dedupExact(spark: SparkSession, dir: String): DataFrame =
     docs(spark, dir).agg(
@@ -434,51 +414,26 @@ object DedupOps {
 
   private[graft] def dedupJaccardCompute(spark: SparkSession,
       dir: String): DataFrame = {
-    // sorted once per doc → candidate verify is a codegen'd
-    // two-pointer merge (SortedIntersectCount), not a per-pair hash set
-    // d and banded each feed two join sides; left as views, the
-    // tokenize/minhash prep re-runs under every AQE stage build over
-    // the one-partition scan (the r6 prefix-join lesson — this one
-    // pipeline also feeds dedup_clusters and near_dup_clean, so the
-    // materialization pays off three rows deep).
-    val d = spread(docs(spark, dir))
+    // sorted once per doc for the two-pointer verify; d feeds both
+    // verify sides — left as a view, the tokenize prep re-runs under
+    // every AQE stage build over the one-partition scan (the r6
+    // prefix-join lesson — this one pipeline also feeds dedup_clusters
+    // and near_dup_clean, so the materialization pays off three rows
+    // deep).
+    val d = Tables.spread(docs(spark, dir))
       .select(col("doc_id"), col("lang"), col("source"),
         sort_array(array_distinct(
           transform(split(col("text"), " "), t => xxhash64(t)))).as("toks"))
       .localCheckpoint()
     // blocking keys ride through the signature aggregation (no
     // metadata re-join) and join as part of the bucket key
-    val sigs = minhashSignaturesFromSets(spread(docs(spark, dir)),
+    val sigs = minhashSignaturesFromSets(Tables.spread(docs(spark, dir)),
       array_distinct(tokenHashes(col("text"))), k = 32,
       carry = Seq("lang", "source"))
-    // keyed NUMBERED repartition AFTER the checkpoint (r15): a
-    // localCheckpoint drops the plan's outputPartitioning (the
-    // executed plan re-exchanged BOTH self-join sides and AQE then
-    // byte-coalesced the pair expansion to a few tasks), so the old
-    // pre-checkpoint repartition was a wasted exchange. Placed above
-    // the checkpoint it is planned once, reused by both aliases
-    // (ReusedExchange), and — being REPARTITION_BY_NUM — is exempt
-    // from AQE coalescing, so the CPU-dense bucket join keeps full
-    // width.
-    val banded = lshBands(sigs, k = 32, bands = 16,
-      carry = Seq("lang", "source"))
-      .localCheckpoint()
-      .repartition(parallelism(sigs), col("band"), col("bh"))
-    val cands = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col("x.lang") === col("y.lang") &&
-          col("x.source") === col("y.source") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"))
-      .distinct()
-    val inter = graft.functions.SortedIntersectCount.count(
-      col("ti"), col("tj"))
-    val uni = size(col("ti")) + size(col("tj")) - inter
-    cands
-      .join(d.select(col("doc_id").as("i"), col("toks").as("ti")), Seq("i"))
-      .join(d.select(col("doc_id").as("j"), col("toks").as("tj")), Seq("j"))
-      .select(col("i"), col("j"),
-        (inter.cast("double") / uni.cast("double")).as("jaccard"))
+    val cands = CandidatePairs.selfJoin(
+      lshBands(sigs, k = 32, bands = 16, carry = Seq("lang", "source")),
+      key = Seq("band", "bh"), block = Seq("lang", "source"))
+    CandidatePairs.jaccardPairs(cands, d, "toks")
       .filter(col("jaccard") >= 0.8)
       .orderBy(col("i"), col("j"))
   }
@@ -486,7 +441,9 @@ object DedupOps {
   /** The all-pairs-within-block form of [[dedupJaccard]] — kept ONLY as
     * the spec-side ground truth (DedupSpec asserts the LSH path returns
     * the identical pair set); block × block products do not survive a
-    * 100× scale-up, so this is never a registered driver query. */
+    * 100× scale-up, so this is never a registered catalog row. Its
+    * `array_intersect` set arithmetic deliberately shares no code with
+    * the [[CandidatePairs]] verify it checks. */
   def dedupJaccardAllPairs(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir).select(col("doc_id"), col("lang"), col("source"),
       array_distinct(transform(split(col("text"), " "), t => xxhash64(t)))
@@ -662,30 +619,9 @@ object DedupOps {
     * Then exact shingle-Jaccard verification ≥ `threshold`. */
   def minhashPairs(d: DataFrame, k: Int = 32, bands: Int = 8,
       threshold: Double = 0.5): DataFrame = {
-    val sigs = minhashSignatures(d, k)
-    // materialized once; the NUMBERED bucket-key repartition sits
-    // ABOVE the checkpoint (r15 — a localCheckpoint drops
-    // outputPartitioning, so the r6 "no exchange" claim had silently
-    // regressed to re-exchanging both join sides and AQE coalesced
-    // the pair expansion to 3 tasks): one non-coalescible exchange,
-    // reused by both aliases, full-width join
-    val banded = lshBands(sigs, k, bands)
-      .localCheckpoint()
-      .repartition(parallelism(sigs), col("band"), col("bh"))
-    val cands = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"))
-      .distinct()
-    val sh = shingleSets(d).localCheckpoint()
-    val inter = graft.functions.SortedIntersectCount.count(
-      col("si"), col("sj"))
-    val uni = size(col("si")) + size(col("sj")) - inter
-    cands
-      .join(sh.select(col("doc_id").as("i"), col("shs").as("si")), Seq("i"))
-      .join(sh.select(col("doc_id").as("j"), col("shs").as("sj")), Seq("j"))
-      .select(col("i"), col("j"),
-        (inter.cast("double") / uni.cast("double")).as("jaccard"))
+    val cands = CandidatePairs.selfJoin(
+      lshBands(minhashSignatures(d, k), k, bands), key = Seq("band", "bh"))
+    CandidatePairs.jaccardPairs(cands, shingleSets(d).localCheckpoint(), "shs")
       .filter(col("jaccard") >= threshold)
   }
 
@@ -695,14 +631,11 @@ object DedupOps {
   def shingleJaccardAllPairs(spark: SparkSession, dir: String,
       threshold: Double = 0.5): DataFrame = {
     val sh = shingleSets(docs(spark, dir))
-    val inter = graft.functions.SortedIntersectCount.count(
-      col("si"), col("sj"))
-    val uni = size(col("si")) + size(col("sj")) - inter
     sh.select(col("doc_id").as("i"), col("shs").as("si"))
       .join(sh.select(col("doc_id").as("j"), col("shs").as("sj")),
         col("i") < col("j"))
       .select(col("i"), col("j"),
-        (inter.cast("double") / uni.cast("double")).as("jaccard"))
+        CandidatePairs.jaccard(col("si"), col("sj")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
       .orderBy(col("i"), col("j"))
   }
@@ -721,7 +654,7 @@ object DedupOps {
     * a 3-shingle measure still vanishes for unrelated docs — the
     * candidate join stays Σ bucket², never N². */
   def dedupMinhash(spark: SparkSession, dir: String): DataFrame =
-    minhashPairs(spread(docs(spark, dir)), k = 32, bands = 32,
+    minhashPairs(Tables.spread(docs(spark, dir)), k = 32, bands = 32,
       threshold = 0.5)
       .orderBy(col("i"), col("j"))
 
@@ -743,61 +676,17 @@ object DedupOps {
       |SELECT i, j, jaccard FROM p WHERE jaccard >= 0.5
       |ORDER BY i, j""".stripMargin
 
-  // ---------------- SimHash ----------------------------------------
-
-  /** 64-bit SimHash over token hashes: sign-sum of each bit across
-    * token xxhash64s. Linear: explode + groupBy + bit fold. */
-  def simhash(d: DataFrame): DataFrame = {
-    val toks = d.select(col("doc_id"),
-      explode(split(col("text"), " ")).as("tok"))
-      .withColumn("h", xxhash64(col("tok")))
-    // per bit: +1 if set else -1; sum > 0 → bit set in fingerprint
-    val bitSums: Seq[Column] = (0 until 64).map { b =>
-      sum(when(col("h").bitwiseAND(lit(1L << b)) =!= 0L, 1).otherwise(-1))
-        .as(s"b$b")
-    }
-    toks.groupBy(col("doc_id")).agg(bitSums.head, bitSums.tail: _*)
-      .select(col("doc_id"),
-        (0 until 64).map(b =>
-          when(col(s"b$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-          .reduce(_.bitwiseOR(_)).as("simhash"))
-  }
-
-  /** Near-dup candidates: hamming distance ≤ 3 found by colliding on
-    * any of four 16-bit chunks (pigeonhole: ≤3 differing bits leave at
-    * least one chunk identical). */
-  def simhashPairs(d: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val s = simhash(d)
-    val chunked = s.select(col("doc_id"), col("simhash"),
-      posexplode(array((0 until 4).map(c =>
-        shiftrightunsigned(col("simhash"), c * 16)
-          .bitwiseAND(lit(0xFFFFL))): _*)))
-      .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "cv")
-    val popcountDiff = {
-      val x = col("x.simhash").bitwiseXOR(col("y.simhash"))
-      bit_count(x)
-    }
-    chunked.as("x").join(chunked.as("y"),
-        col("x.chunk") === col("y.chunk") && col("x.cv") === col("y.cv") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"),
-        popcountDiff.as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
-
   // -------- SimHash under a cross-engine-exact hash family --------
   //
-  // The xxhash64 path above is the production fingerprint (one hash
-  // per token, no joins). It cannot be oracled: DuckDB has no
-  // xxhash64. This variant runs the SAME algorithm under a hash
-  // family both engines compute bit-identically — token → vocab rank
-  // (row_number over the sorted distinct vocabulary; binary UTF-8
-  // ordering on both engines) → two QUADRATIC permutation-style
-  // hashes over Z_P (the affine seeded_sample family is linear, so
-  // composing it stays linear and consecutive ranks would get
-  // correlated bit patterns; the h² term breaks that), 30 bits each
-  // → 60-bit fingerprint. Chunk-collision candidates over four
+  // 64-bit SimHash (sign-sum of each bit across token hashes) cannot
+  // be oracled under xxhash64: DuckDB has no xxhash64. This form runs
+  // the algorithm under a hash family both engines compute
+  // bit-identically — token → vocab rank (row_number over the sorted
+  // distinct vocabulary; binary UTF-8 ordering on both engines) → two
+  // QUADRATIC permutation-style hashes over Z_P (the affine
+  // seeded_sample family is linear, so composing it stays linear and
+  // consecutive ranks would get correlated bit patterns; the h² term
+  // breaks that), 30 bits each → 60-bit fingerprint. Chunk-collision candidates over four
   // 15-bit chunks are pigeonhole-COMPLETE for hamming ≤ 3, and the
   // verify step keeps only true pairs — so the pair list equals the
   // all-pairs hamming scan DuckDB replays, and the row is FULLY
@@ -807,8 +696,8 @@ object DedupOps {
   // rank-offsets job ([[graft.functions.GlobalRank]], r11 — the
   // earlier global row_number window funneled the corpus-growing
   // vocabulary, ~10⁷ rows at 100 TB, through one task); everything
-  // else is the linear explode + groupBy + chunk-join shape of the
-  // production path.
+  // else is a linear explode + groupBy and the chunk-collision join of
+  // [[CandidatePairs]].
 
   val SimhashOracleBits = 60
   val SimhashOracleMaxHamming = 3
@@ -859,35 +748,22 @@ object DedupOps {
 
   /** Complete hamming-≤3 pair list: four 15-bit chunk collisions
     * (pigeonhole-complete) + exact bit_count verify. */
-  def simhashOraclePairs(d: DataFrame): DataFrame = {
-    val s = simhashOracle(d)
-    // one fingerprint row per doc, materialized once and co-partitioned
-    // on the chunk-bucket key for an exchange-free self-join (r6)
-    val chunked = s.select(col("doc_id"), col("simhash"),
-      posexplode(array((0 until 4).map(c =>
-        shiftrightunsigned(col("simhash"), c * 15)
-          .bitwiseAND(lit(0x7FFFL))): _*)))
-      .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "cv")
-      .localCheckpoint()
-      // numbered repartition ABOVE the checkpoint (r15): checkpoints
-      // drop outputPartitioning, so the r6 co-partitioning claim had
-      // regressed to two fresh AQE-coalescible exchanges; this one is
-      // reused by both aliases and keeps the chunk join full-width
-      .repartition(parallelism(s), col("chunk"), col("cv"))
-    chunked.as("x").join(chunked.as("y"),
-        col("x.chunk") === col("y.chunk") && col("x.cv") === col("y.cv") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"),
-        bit_count(col("x.simhash").bitwiseXOR(col("y.simhash")))
-          .cast("long").as("hamming"))
-      .distinct()
+  def simhashOraclePairs(d: DataFrame): DataFrame =
+    CandidatePairs.selfJoin(
+      simhashOracle(d).select(col("doc_id"), col("simhash"),
+        posexplode(array((0 until 4).map(c =>
+          shiftrightunsigned(col("simhash"), c * 15)
+            .bitwiseAND(lit(0x7FFFL))): _*)))
+        .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "cv"),
+      key = Seq("chunk", "cv"),
+      score = Seq(bit_count(col("x.simhash").bitwiseXOR(col("y.simhash")))
+        .cast("long").as("hamming")))
       .filter(col("hamming") <= SimhashOracleMaxHamming)
-  }
 
   /** Driver-facing SimHash query: the oracled variant's complete
     * hamming-≤3 pair list. */
   def dedupSimhash(spark: SparkSession, dir: String): DataFrame =
-    simhashOraclePairs(spread(docs(spark, dir)))
+    simhashOraclePairs(Tables.spread(docs(spark, dir)))
       .select(col("i"), col("j"), col("hamming"))
       .orderBy(col("i"), col("j"))
 
@@ -968,36 +844,28 @@ object DedupOps {
 
   /** Complete hamming-≤3 pair list over the 80-bit fingerprint: four
     * 20-bit chunk collisions (pigeonhole-complete) + exact two-word
-    * bit_count verify. Same co-partitioned exchange-free self-join
-    * shape as [[simhashOraclePairs]]. */
+    * bit_count verify. Same chunk-collision self-join as
+    * [[simhashOraclePairs]]. */
   def simhashWidePairs(d: DataFrame): DataFrame = {
-    val s = simhashWide(d)
     val m = (1L << SimhashWideChunkBits) - 1
-    val chunked = s.select(col("doc_id"), col("sh_lo"), col("sh_hi"),
-      posexplode(array(
-        col("sh_lo").bitwiseAND(lit(m)),
-        shiftrightunsigned(col("sh_lo"), 20).bitwiseAND(lit(m)),
-        shiftrightunsigned(col("sh_lo"), 40).bitwiseAND(lit(m)),
-        col("sh_hi").bitwiseAND(lit(m)))))
-      .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "cv")
-      .localCheckpoint()
-      // repartition above the checkpoint — same r15 fix as
-      // simhashOraclePairs (checkpoints drop outputPartitioning)
-      .repartition(parallelism(s), col("chunk"), col("cv"))
-    chunked.as("x").join(chunked.as("y"),
-        col("x.chunk") === col("y.chunk") && col("x.cv") === col("y.cv") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"),
-        (bit_count(col("x.sh_lo").bitwiseXOR(col("y.sh_lo"))) +
-          bit_count(col("x.sh_hi").bitwiseXOR(col("y.sh_hi"))))
-          .cast("long").as("hamming"))
-      .distinct()
+    CandidatePairs.selfJoin(
+      simhashWide(d).select(col("doc_id"), col("sh_lo"), col("sh_hi"),
+        posexplode(array(
+          col("sh_lo").bitwiseAND(lit(m)),
+          shiftrightunsigned(col("sh_lo"), 20).bitwiseAND(lit(m)),
+          shiftrightunsigned(col("sh_lo"), 40).bitwiseAND(lit(m)),
+          col("sh_hi").bitwiseAND(lit(m)))))
+        .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "cv"),
+      key = Seq("chunk", "cv"),
+      score = Seq((bit_count(col("x.sh_lo").bitwiseXOR(col("y.sh_lo"))) +
+        bit_count(col("x.sh_hi").bitwiseXOR(col("y.sh_hi"))))
+        .cast("long").as("hamming")))
       .filter(col("hamming") <= SimhashOracleMaxHamming)
   }
 
   /** Registered row: the widened-chunk SimHash pair list. */
   def dedupSimhashWide(spark: SparkSession, dir: String): DataFrame =
-    simhashWidePairs(spread(docs(spark, dir)))
+    simhashWidePairs(Tables.spread(docs(spark, dir)))
       .select(col("i"), col("j"), col("hamming"))
       .orderBy(col("i"), col("j"))
 
@@ -1721,22 +1589,14 @@ object DedupOps {
     * cannot sort an unbounded result. */
   def ingestPairs(newDocs: DataFrame, idx: NearDupIndex,
       threshold: Double = 0.5): DataFrame = {
-    val nb = lshBands(minhashSignatures(newDocs, 32), 32, 32)
-    val cands = nb.as("x").join(idx.bands.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh"))
-      .select(col("x.doc_id").as("new_id"), col("y.doc_id").as("live_id"))
-      .distinct()
-    val shN = shingleSets(newDocs)
-    val inter = graft.functions.SortedIntersectCount.count(
-      col("si"), col("sj"))
-    val uni = size(col("si")) + size(col("sj")) - inter
-    cands
-      .join(shN.select(col("doc_id").as("new_id"), col("shs").as("si")),
-        Seq("new_id"))
-      .join(idx.shingles.select(col("doc_id").as("live_id"),
-        col("shs").as("sj")), Seq("live_id"))
+    val cands = CandidatePairs.probe(
+      lshBands(minhashSignatures(newDocs, 32), 32, 32), idx.bands,
+      key = Seq("band", "bh"), names = ("new_id", "live_id"))
+    CandidatePairs.attach(CandidatePairs.attach(cands, "new_id",
+        shingleSets(newDocs), Seq("shs")), "live_id", idx.shingles, Seq("shs"))
       .select(col("new_id"), col("live_id"),
-        (inter.cast("double") / uni.cast("double")).as("jaccard"))
+        CandidatePairs.jaccard(col("shs_new_id"), col("shs_live_id"))
+          .as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -1883,50 +1743,22 @@ object DedupOps {
     * double is a division of two exactly-agreed integers, so it is
     * bit-identical across engines. */
   def dedupContainment(spark: SparkSession, dir: String): DataFrame =
-    containmentPairs(spread(docs(spark, dir)))
+    containmentPairs(Tables.spread(docs(spark, dir)))
 
   /** Core of [[dedupContainment]] over any (doc_id, text) frame —
     * factored for the planted-corpus spec. */
   def containmentPairs(docsDf: DataFrame, cap: Int = ContainCap,
       tau: Double = ContainTau): DataFrame = {
-    val d = docsDf
-      .select(col("doc_id"), split(col("text"), " ").as("ts"))
-      .filter(size(col("ts")) >= 3)
-    // Same duplicated-prep pathology the prefix join had (r6): grams
-    // is planned under BOTH the df-filter subtree and the join's left
-    // side, and rare under THREE consumers (pair join a/b + the na
-    // agg) — each AQE stage build re-ran the shingle hashing from the
-    // scan. Materialize each once.
-    val grams = d
-      .select(col("doc_id"), explode(shingleHashes64(col("ts"))).as("sh"))
-      .distinct()
-      .localCheckpoint()
-    val rareSh = grams.groupBy(col("sh"))
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") <= cap)
-      .select(col("sh"))
-    // hash-partitioned by the join key AFTER the checkpoint (r15: a
-    // localCheckpoint does NOT preserve outputPartitioning as the old
-    // comment claimed — the executed plan re-exchanged both self-join
-    // sides). The NUMBERED repartition is planned once, reused by
-    // both aliases, and is exempt from AQE coalescing — left to AQE,
-    // the few-MB shuffle coalesces to a few partitions and the
-    // Σ min(df,cap)² pair expansion loses its parallelism (the r6
-    // single-thread pathology, measured then at 1.8 s of the row's
-    // 4 s).
-    val rare = grams.join(rareSh, Seq("sh"))
-      .localCheckpoint()
-      .repartition(parallelism(grams), col("sh"))
-    val na = rare.groupBy(col("doc_id")).agg(count(lit(1)).as("na"))
-    val shared = rare.as("a")
-      .join(rare.as("b"), col("a.sh") === col("b.sh") &&
-        col("a.doc_id") =!= col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .agg(count(lit(1)).as("shared"))
-    shared
-      .join(na.withColumnRenamed("doc_id", "a_id"), Seq("a_id"))
+    val (shared, sizes) = CandidatePairs.coCount(
+      docsDf.select(col("doc_id"), split(col("text"), " ").as("ts"))
+        .filter(size(col("ts")) >= 3)
+        .select(col("doc_id"),
+          explode(shingleHashes64(col("ts"))).as("sh"))
+        .distinct(),
+      key = "sh", cap = cap, order = _ =!= _, names = ("a_id", "b_id"))
+    CandidatePairs.attach(shared, "a_id", sizes, Seq("n"))
       .select(col("a_id"), col("b_id"),
-        (col("shared").cast("double") / col("na").cast("double"))
+        (col("shared").cast("double") / col("n_a_id").cast("double"))
           .as("containment"))
       .filter(col("containment") >= tau)
       .orderBy(col("a_id"), col("b_id"))
@@ -1964,7 +1796,7 @@ object DedupOps {
     * density rather than staying band-bounded — the classic
     * exact-vs-LSH trade. */
   def dedupPrefixJoin(spark: SparkSession, dir: String): DataFrame =
-    prefixJoinPairs(spread(docs(spark, dir)))
+    prefixJoinPairs(Tables.spread(docs(spark, dir)))
 
   /** Core of [[dedupPrefixJoin]] over any (doc_id, text) frame; docs
     * under 3 tokens have no shingles and are excluded (mirrored by the
@@ -1998,40 +1830,18 @@ object DedupOps {
         expr(s"($tauNum * s + ${tauDen - 1}) DIV $tauDen") + lit(1))
       .select(col("doc_id"), col("s"),
         explode(expr("slice(ord, 1, p)")).as("h"))
-    // Both sides of the candidate self-join and both verify joins
-    // re-plan the shingle → df → ordered-prefix pipeline from the scan
-    // when left as views — the whole prep subtree was planned FOUR
-    // times and dominated the row's cost (r5 judge: 9.2 s at sf0.1,
-    // blow-up ratio 0.8× = pure fixed stage overhead). `prefix` is
-    // |docs|×prefix-len skinny rows and `sorted` |docs| shingle arrays
-    // — kilobytes per million docs — so eager localCheckpoint (the
-    // ksOfHist idiom: reference-tracked blocks, freed by the
-    // ContextCleaner, unlike an unpaired persist) materializes each
-    // ONCE and all four consumers read the cached rows.
-    val prefixC = prefix
-      .localCheckpoint()
-      // repartition above the checkpoint — same r15 fix as the other
-      // bucket self-joins (checkpoints drop outputPartitioning)
-      .repartition(parallelism(prefix), col("h"))
-    val cands = prefixC.as("a").join(prefixC.as("b"),
-        col("a.h") === col("b.h") &&
-          col("a.doc_id") < col("b.doc_id") &&
-          col("a.s") * tauNum <= col("b.s") * tauDen &&
-          col("b.s") * tauNum <= col("a.s") * tauDen)
-      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
-      .distinct()
+    // `prefix` feeds both candidate sides and `sorted` both verify
+    // sides: left as views, the shingle → df → ordered-prefix pipeline
+    // was planned FOUR times and dominated the row's cost (r5 judge:
+    // 9.2 s at sf0.1, blow-up ratio 0.8× = pure fixed stage overhead).
+    // Both are kilobytes per million docs, so each is materialized
+    // ONCE (the kernel checkpoints `prefix`).
+    val cands = CandidatePairs.selfJoin(prefix, key = Seq("h"),
+      on = Seq(col("x.s") * tauNum <= col("y.s") * tauDen,
+        col("y.s") * tauNum <= col("x.s") * tauDen))
     val sorted = base.select(col("doc_id"), sort_array(col("hs")).as("toks"))
       .localCheckpoint()
-    val inter = graft.functions.SortedIntersectCount.count(
-      col("ti"), col("tj"))
-    val uni = size(col("ti")) + size(col("tj")) - inter
-    cands
-      .join(sorted.select(col("doc_id").as("i"), col("toks").as("ti")),
-        Seq("i"))
-      .join(sorted.select(col("doc_id").as("j"), col("toks").as("tj")),
-        Seq("j"))
-      .select(col("i"), col("j"),
-        (inter.cast("double") / uni.cast("double")).as("jaccard"))
+    CandidatePairs.jaccardPairs(cands, sorted, "toks")
       .filter(col("jaccard") * tauDen >= tauNum)
       .orderBy(col("i"), col("j"))
   }
@@ -2109,7 +1919,7 @@ object DedupOps {
       .where(length(col("chunk")) >= CdcMinLen)
 
   def dedupCdc(spark: SparkSession, dir: String): DataFrame = {
-    val base = spread(docs(spark, dir))
+    val base = Tables.spread(docs(spark, dir))
       .select(col("doc_id"), col("source"),
         graft.functions.CdcChunks.chunks(col("text")).as("arr"))
       .localCheckpoint()

@@ -177,8 +177,6 @@ object IngestDoor {
     new java.util.concurrent.ConcurrentHashMap[
       (SparkSession, String), (DataFrame, DoorIndex)]()
 
-  private[graft] def clearDoorMemo(): Unit = sidesMemo.clear()
-
   private[graft] def doorSidesFor(spark: SparkSession,
       dir: String): (DataFrame, DoorIndex) = {
     Memos.purgeStopped(sidesMemo)

@@ -411,6 +411,56 @@ object MultimodalOps {
     withLums.selectExpr("id" +: chunks: _*)
   }
 
+  /** The fingerprint-level near-dup graph shared by the pair and
+    * cluster deliverables, over (id, chunk…) fingerprint rows of
+    * 16-bit chunks: (members, verified) where members = (id, hid) maps
+    * every fingerprintable member to its packed fingerprint and
+    * verified = (i ≤ j, hamming ≤ `maxHamming`) is the
+    * pigeonhole-complete fingerprint pair set (including A=A
+    * self-pairs for identical members). Candidates come from the
+    * chunk-collision join over DISTINCT fingerprints, so everything
+    * downstream of the distinct() is bounded by CONTENT DIVERSITY,
+    * never by corpus size. */
+  private def fpGraph(fp: DataFrame, chunks: Seq[String],
+      maxHamming: Int): (DataFrame, DataFrame) = {
+    // hid packs the 16-bit chunks into ONE bijective BIGINT (may go
+    // negative via the sign bit — an arbitrary but consistent total
+    // order is all the unordered-pair dedup below needs)
+    val hid = chunks.reverse.zipWithIndex
+      .map { case (c, k) => shiftleft(col(c), 16 * k) }.reduce(_ bitwiseOR _)
+    // NULL fingerprints (corrupt/truncated payloads — see the fpok
+    // guards in [[imageDHash]] / [[audioFingerprint]]) carry no
+    // perceptual content and drop out here rather than clustering
+    val h = fp.filter(chunks.map(col(_).isNotNull).reduce(_ && _))
+      .withColumn("hid", hid)
+      .localCheckpoint() // member table: feeds expansion twice
+    val d = h.select(col("hid") +: chunks.map(col): _*).distinct()
+      .localCheckpoint() // distinct fingerprints: buckets + verify
+    // i <= j keeps each unordered fingerprint pair once, INCLUDING
+    // the A=A self-pair (identical members, hamming 0)
+    val cands = CandidatePairs.selfJoin(
+      d.select(col("hid"), posexplode(array(chunks.map(col): _*)))
+        .toDF("hid", "ci", "cv"),
+      key = Seq("ci", "cv"), id = "hid", order = _ <= _)
+    val verified = CandidatePairs.verify(cands, d, chunks, id = "hid")
+      .select(col("i"), col("j"), chunks
+        .map(c => bit_count(col(s"${c}_i") bitwiseXOR col(s"${c}_j")))
+        .reduce(_ + _).cast("long").as("hamming"))
+      .filter(col("hamming") <= maxHamming)
+    (h.select(col("id"), col("hid")), verified)
+  }
+
+  private def imageFpGraph(bmp: DataFrame): (DataFrame, DataFrame) =
+    fpGraph(imageDHash(bmp), Seq("c0", "c1", "c2", "c3"), DHashMaxHamming)
+
+  /** The audio fingerprint graph over the 2×16-bit window-sum
+    * fingerprints (the r7 form joined at MEMBER level — correct, but
+    * Σ bucket² over members is exactly the concentration blow-up the
+    * image path compacted away; identical recordings are common in a
+    * crawl, so the audio leg gets the same compaction). */
+  private def audioFpGraph(wav: DataFrame): (DataFrame, DataFrame) =
+    fpGraph(audioFingerprint(wav), Seq("c0", "c1"), AudioMaxHamming)
+
   /** Near-duplicate IMAGE pairs over any (id, payload) frame:
     * [[imageDHash]] per image, then FINGERPRINT COMPACTION (the
     * fuzzy_join distinct-name idiom): the chunk-collision candidate
@@ -435,59 +485,6 @@ object MultimodalOps {
     * output rows. At 100 TB the 2¹⁶-value chunk space over DISTINCT
     * fingerprints is the knob — band wider as content diversity
     * grows, like simhash's bands. */
-  /** The fingerprint-level near-dup graph shared by the pair and
-    * cluster deliverables: (members, verified) where members =
-    * (id, hid) maps every fingerprintable image to its packed 64-bit
-    * dHash and verified = (ha ≤ hb, hamming) is the
-    * pigeonhole-complete fingerprint pair set (including A=A
-    * self-pairs for identical images). Everything downstream of the
-    * distinct() is bounded by CONTENT DIVERSITY (distinct
-    * fingerprints), never by corpus size. */
-  private def imageFpGraph(bmp: DataFrame): (DataFrame, DataFrame) = {
-    val spark = bmp.sparkSession
-    val np = spark.sparkContext.defaultParallelism
-    // hid packs the 4×16-bit chunks into ONE bijective BIGINT (may go
-    // negative via the sign bit — an arbitrary but consistent total
-    // order is all the unordered-pair dedup below needs)
-    val hid = expr("(c0 << 48) | (c1 << 32) | (c2 << 16) | c3")
-    // NULL fingerprints (corrupt/truncated payloads — see the fpok
-    // guard in [[imageDHash]]) carry no perceptual content and drop
-    // out here rather than clustering together
-    val h = imageDHash(bmp)
-      .filter(col("c0").isNotNull && col("c1").isNotNull &&
-        col("c2").isNotNull && col("c3").isNotNull)
-      .withColumn("hid", hid)
-      .localCheckpoint() // member table: feeds expansion twice
-    val d = h.select(col("hid"), col("c0"), col("c1"), col("c2"),
-        col("c3")).distinct()
-      .localCheckpoint() // distinct fingerprints: buckets + verify
-    val chunks = d.select(col("hid"), posexplode(
-        array(col("c0"), col("c1"), col("c2"), col("c3"))))
-      .toDF("hid", "ci", "cv")
-      .repartition(np, col("ci"), col("cv"))
-      .localCheckpoint() // both self-join sides, co-partitioned
-    // ha <= hb keeps each unordered fingerprint pair once, INCLUDING
-    // the A=A self-pair (identical images, hamming 0)
-    val cands = chunks.as("x").join(chunks.as("y"),
-        col("x.ci") === col("y.ci") && col("x.cv") === col("y.cv") &&
-          col("x.hid") <= col("y.hid"))
-      .select(col("x.hid").as("ha"), col("y.hid").as("hb"))
-      .distinct()
-    val verified = cands
-      .join(d.select(col("hid").as("ha"), col("c0").as("x0"),
-        col("c1").as("x1"), col("c2").as("x2"), col("c3").as("x3")),
-        Seq("ha"))
-      .join(d.select(col("hid").as("hb"), col("c0").as("y0"),
-        col("c1").as("y1"), col("c2").as("y2"), col("c3").as("y3")),
-        Seq("hb"))
-      .withColumn("hamming", expr(
-        """CAST(bit_count(x0 ^ y0) + bit_count(x1 ^ y1) +
-          |bit_count(x2 ^ y2) + bit_count(x3 ^ y3) AS BIGINT)""".stripMargin))
-      .filter(col("hamming") <= DHashMaxHamming)
-      .select(col("ha"), col("hb"), col("hamming"))
-    (h.select(col("id"), col("hid")), verified)
-  }
-
   def imageDedupPairs(bmp: DataFrame): DataFrame =
     (expandPairs _).tupled(imageFpGraph(bmp))
 
@@ -496,12 +493,10 @@ object MultimodalOps {
     * appears exactly once (ordered by least/greatest), and self-pairs
     * dedup on id order. */
   private def expandPairs(h: DataFrame, verified: DataFrame): DataFrame =
-    verified
-      .join(h.select(col("hid").as("ha"), col("id").as("ia")), Seq("ha"))
-      .join(h.select(col("hid").as("hb"), col("id").as("ib")), Seq("hb"))
-      .filter(col("ha") =!= col("hb") || col("ia") < col("ib"))
-      .select(least(col("ia"), col("ib")).as("i"),
-        greatest(col("ia"), col("ib")).as("j"), col("hamming"))
+    CandidatePairs.verify(verified, h, Seq("id"), id = "hid")
+      .filter(col("i") =!= col("j") || col("id_i") < col("id_j"))
+      .select(least(col("id_i"), col("id_j")).as("i"),
+        greatest(col("id_i"), col("id_j")).as("j"), col("hamming"))
       .orderBy(col("i"), col("j"))
 
   /** CORPUS-LINEAR cluster deliverable over a (members, verified)
@@ -520,8 +515,7 @@ object MultimodalOps {
     * are one shuffle each, both corpus-linear. */
   private def fpClusters(h: DataFrame, verified: DataFrame): DataFrame = {
     val fpLab = DedupOps.resolveDupClusters(
-        verified.filter(col("ha") =!= col("hb"))
-          .select(col("ha").as("i"), col("hb").as("j")))
+        verified.filter(col("i") =!= col("j")))
       .select(col("doc_id").as("hid"), col("keep_id").as("fkeep"))
     // fingerprints with no CROSS-fingerprint edge label themselves —
     // identical-image groups (one shared fingerprint) still cluster
@@ -704,46 +698,6 @@ object MultimodalOps {
       s"CASE WHEN fpok THEN CAST($bits AS BIGINT) END AS c$c"
     }
     withSums.selectExpr("id" +: chunks: _*)
-  }
-
-  /** The audio fingerprint graph — [[imageFpGraph]] over the 2×16-bit
-    * window-sum fingerprints: members (id, hid) + verified fingerprint
-    * pairs (ha ≤ hb, hamming ≤ [[AudioMaxHamming]]), candidates from
-    * the chunk-collision join over DISTINCT fingerprints (the r7 form
-    * joined at MEMBER level — correct, but Σ bucket² over members is
-    * exactly the concentration blow-up the image path compacted away;
-    * identical recordings are common in a crawl, so the audio leg gets
-    * the same compaction). */
-  private def audioFpGraph(wav: DataFrame): (DataFrame, DataFrame) = {
-    val spark = wav.sparkSession
-    val np = spark.sparkContext.defaultParallelism
-    val hid = expr("(c0 << 16) | c1") // bijective 32-bit pack
-    val h = audioFingerprint(wav)
-      .filter(col("c0").isNotNull && col("c1").isNotNull)
-      .withColumn("hid", hid)
-      .localCheckpoint()
-    val d = h.select(col("hid"), col("c0"), col("c1")).distinct()
-      .localCheckpoint()
-    val chunks = d.select(col("hid"),
-        posexplode(array(col("c0"), col("c1"))))
-      .toDF("hid", "ci", "cv")
-      .repartition(np, col("ci"), col("cv"))
-      .localCheckpoint()
-    val cands = chunks.as("x").join(chunks.as("y"),
-        col("x.ci") === col("y.ci") && col("x.cv") === col("y.cv") &&
-          col("x.hid") <= col("y.hid"))
-      .select(col("x.hid").as("ha"), col("y.hid").as("hb"))
-      .distinct()
-    val verified = cands
-      .join(d.select(col("hid").as("ha"), col("c0").as("x0"),
-        col("c1").as("x1")), Seq("ha"))
-      .join(d.select(col("hid").as("hb"), col("c0").as("y0"),
-        col("c1").as("y1")), Seq("hb"))
-      .withColumn("hamming",
-        expr("CAST(bit_count(x0 ^ y0) + bit_count(x1 ^ y1) AS BIGINT)"))
-      .filter(col("hamming") <= AudioMaxHamming)
-      .select(col("ha"), col("hb"), col("hamming"))
-    (h.select(col("id"), col("hid")), verified)
   }
 
   /** Near-duplicate AUDIO pairs via the compacted fingerprint graph —

@@ -320,22 +320,14 @@ object SimilarityOps {
     // ONE self-join on (table, bucket) via posexplode — not `tables`
     // unioned joins (16 separate join stages cost ~5 s of pure
     // scheduling at local scale and 16 shuffles on a cluster)
-    val keyed = e.select(col("vec_id"), posexplode(col("bkts")))
-      .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bk")
-    val cands = keyed.as("x").join(keyed.as("y"),
-        col("x.tbl") === col("y.tbl") && col("x.bk") === col("y.bk") &&
-          col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("i"), col("y.vec_id").as("j"))
-      .distinct()
-    val side = e.select(col("vec_id"), col("v"), col("n2"))
-    cands
-      .join(side.select(col("vec_id").as("i"), col("v").as("iv"),
-        col("n2").as("ina")), Seq("i"))
-      .join(side.select(col("vec_id").as("j"), col("v").as("jv"),
-        col("n2").as("jnb")), Seq("j"))
+    val cands = CandidatePairs.selfJoin(
+      e.select(col("vec_id"), posexplode(col("bkts")))
+        .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bk"),
+      key = Seq("tbl", "bk"), id = "vec_id")
+    CandidatePairs.verify(cands, e, Seq("v", "n2"), id = "vec_id")
       .select(col("i"), col("j"),
-        VectorOps.cosineFrom(VectorOps.dotQ(col("iv"), col("jv")),
-          col("ina"), col("jnb")).as("cos"))
+        VectorOps.cosineFrom(VectorOps.dotQ(col("v_i"), col("v_j")),
+          col("n2_i"), col("n2_j")).as("cos"))
       .filter(col("cos") >= threshold)
   }
 

@@ -222,25 +222,12 @@ object VideoOps {
     * anywhere; at 100 TB the frame fingerprint table is the persisted
     * index an ingest batch probes (the dedup_ingest shape). */
   def videoDedupPairs(video: DataFrame): DataFrame = {
-    val occ = videoFrameSets(video).localCheckpoint()
-    val kept = occ.join(
-      occ.groupBy(col("fkey")).agg(count(lit(1)).as("df"))
-        .filter(col("df") <= VideoDfCap)
-        .select(col("fkey")),
-      Seq("fkey"))
-    val sizes = kept.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    val shared = kept.select(col("fkey"), col("id").as("i"))
-      .join(kept.select(col("fkey"), col("id").as("j")), Seq("fkey"))
-      .filter(col("i") < col("j"))
-      .groupBy(col("i"), col("j"))
-      .agg(count(lit(1)).as("shared_frames"))
-    shared
-      .join(sizes.select(col("id").as("i"), col("n").as("ni")), Seq("i"))
-      .join(sizes.select(col("id").as("j"), col("n").as("nj")), Seq("j"))
-      .withColumn("jaccard_ppm", expr(
-        "1000000 * shared_frames DIV (ni + nj - shared_frames)"))
+    val (shared, sizes) = CandidatePairs.coCount(videoFrameSets(video),
+      key = "fkey", cap = VideoDfCap, id = "id")
+    CandidatePairs.verify(shared, sizes, Seq("n"), id = "id")
+      .select(col("i"), col("j"), col("shared").as("shared_frames"),
+        expr("1000000 * shared DIV (n_i + n_j - shared)").as("jaccard_ppm"))
       .filter(col("jaccard_ppm") >= VideoJaccardPpm)
-      .select(col("i"), col("j"), col("shared_frames"), col("jaccard_ppm"))
       .orderBy(col("i"), col("j"))
   }
 
@@ -303,8 +290,6 @@ object VideoOps {
   private val videoLabelMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
       DataFrame]()
-
-  private[graft] def clearVideoLabelMemo(): Unit = videoLabelMemo.clear()
 
   private[graft] def videoClusterLabels(spark: SparkSession,
       dir: String): DataFrame = {

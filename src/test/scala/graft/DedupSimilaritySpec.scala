@@ -151,20 +151,53 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(j01 > 0.5 && j01 < 1.0, s"near-dup jaccard was $j01")
   }
 
-  test("simhash: identical docs get identical hashes; near-dups are close") {
-    val hashes = DedupOps.simhash(plantedDocs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(hashes(2L) == hashes(3L))
-    val hamming01 = java.lang.Long.bitCount(hashes(0L) ^ hashes(1L))
-    val hamming04 = java.lang.Long.bitCount(hashes(0L) ^ hashes(4L))
-    assert(hamming01 < hamming04,
-      s"near-dup hamming $hamming01 should beat unrelated $hamming04")
+  test("CandidatePairs.selfJoin: a pair colliding on several keys " +
+    "appears once, `<` drops and `<=` keeps the self-pair, and an empty " +
+    "input gives an empty result") {
+    import spark.implicits._
+    import graft.operators.CandidatePairs
+    // 1↔2 collide on BOTH (band, bh) keys; 3 shares nothing
+    val keyed = Seq((1L, 0, 10L), (2L, 0, 10L), (1L, 1, 20L), (2L, 1, 20L),
+      (3L, 0, 11L)).toDF("doc_id", "band", "bh")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("i"), col("j")).as[(Long, Long)].collect().toSeq
+    val lt = pairs(CandidatePairs.selfJoin(keyed, Seq("band", "bh")))
+    assert(lt == Seq((1L, 2L)), s"expected the one pair once, got $lt")
+    val le = pairs(CandidatePairs.selfJoin(keyed, Seq("band", "bh"),
+      order = _ <= _))
+    assert(le.sorted == Seq((1L, 1L), (1L, 2L), (2L, 2L), (3L, 3L)),
+      s"`<=` must keep every A=A self-pair exactly once, got $le")
+    val empty = keyed.filter(lit(false))
+    assert(CandidatePairs.selfJoin(empty, Seq("band", "bh")).count() == 0)
+    val sets = Seq((1L, Seq(1L, 2L, 3L)), (2L, Seq(2L, 3L, 4L)))
+      .toDF("doc_id", "toks")
+    val jac = CandidatePairs.jaccardPairs(Seq((1L, 2L)).toDF("i", "j"),
+      sets, "toks").as[(Long, Long, Double)].collect().toSeq
+    assert(jac == Seq((1L, 2L, 0.5)), s"sorted-set Jaccard verify: $jac")
   }
 
-  test("simhashPairs surfaces identical docs at hamming 0") {
-    val pairs = DedupOps.simhashPairs(plantedDocs)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toMap
-    assert(pairs.get((2L, 3L)).contains(0))
+  test("CandidatePairs.coCount: a directed co-count counts a→b and b→a " +
+    "separately, capped keys count in neither pairs nor sizes, and an " +
+    "empty input gives empty results") {
+    import spark.implicits._
+    import graft.operators.CandidatePairs
+    // key "h" is held by three docs: over the cap of 2, so it vanishes
+    val occ = Seq((1L, "a"), (1L, "b"), (1L, "c"), (1L, "h"),
+      (2L, "a"), (2L, "b"), (2L, "h"), (3L, "c"), (3L, "z"), (3L, "h"))
+      .toDF("doc_id", "sh")
+    val (shared, sizes) = CandidatePairs.coCount(occ, key = "sh", cap = 2,
+      order = _ =!= _)
+    val got = shared.as[(Long, Long, Long)].collect().toSet
+    assert(got == Set((1L, 2L, 2L), (2L, 1L, 2L), (1L, 3L, 1L), (3L, 1L, 1L)),
+      s"directed co-counts: $got")
+    assert(sizes.as[(Long, Long)].collect().toMap ==
+      Map(1L -> 3L, 2L -> 2L, 3L -> 2L))
+    val undirected = CandidatePairs.coCount(occ, key = "sh", cap = 2)._1
+      .as[(Long, Long, Long)].collect().toSet
+    assert(undirected == Set((1L, 2L, 2L), (1L, 3L, 1L)))
+    val (es, ez) = CandidatePairs.coCount(occ.filter(lit(false)), key = "sh",
+      cap = 2)
+    assert(es.count() == 0 && ez.count() == 0)
   }
 
   test("oracled simhash: identical docs at hamming 0, chunk candidates " +

@@ -245,6 +245,84 @@ class PlanSpec extends AnyFunSuite {
       s"candidate generation went quadratic:\n$p")
   }
 
+  test("candidate-pair kernel: each side of every near-dup self-join is " +
+    "one numbered bucket-key exchange over the checkpointed key rows") {
+    // A localCheckpoint drops outputPartitioning, so an exchange below
+    // it is wasted and the join re-plans AQE-coalescible
+    // ENSURE_REQUIREMENTS exchanges on the key. Asserted on the initial
+    // adaptive plan, through each row's non-memo entry point.
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.RDDScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS,
+      Exchange, REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import operators.{DedupOps => D, MultimodalOps => M}
+    def names(es: Seq[Expression]): Seq[String] =
+      es.collect { case a: Attribute => a.name }
+    def hashKey(e: ShuffleExchangeExec): Seq[String] =
+      e.outputPartitioning match {
+        case h: HashPartitioning => names(h.expressions)
+        case _ => Nil
+      }
+    lazy val emb = sources.Tables.load(spark, dir, "embeddings")
+    val rows: Seq[(String, Seq[String], () => DataFrame)] = Seq(
+      ("dedup_jaccard", Seq("band", "bh"),
+        () => D.dedupJaccardCompute(spark, dir)),
+      ("dedup_minhash", Seq("band", "bh"), () => D.dedupMinhash(spark, dir)),
+      ("dedup_simhash", Seq("chunk", "cv"), () => D.dedupSimhash(spark, dir)),
+      ("dedup_simhash_wide", Seq("chunk", "cv"),
+        () => D.dedupSimhashWide(spark, dir)),
+      ("dedup_prefix_join", Seq("h"), () => D.dedupPrefixJoin(spark, dir)),
+      ("dedup_containment", Seq("sh"), () => D.dedupContainment(spark, dir)),
+      ("dedup_embedding_lsh", Seq("tbl", "bk"),
+        () => operators.SimilarityOps.dedupEmbeddingLsh(emb)),
+      ("dedup_image", Seq("ci", "cv"), () => M.imageDedupPairs(
+        M.asBmpTable(spark, dir).toDF("id", "payload"))),
+      ("dedup_audio", Seq("ci", "cv"), () => M.audioDedupPairs(
+        M.asWavTable(spark, dir).toDF("id", "payload"))),
+      ("dedup_video", Seq("fkey"), () => operators.VideoOps.videoDedupPairs(
+        operators.VideoOps.asVideoTable(spark, dir).toDF("id", "payload"))))
+    // every violation of every row, so one run names all broken sites
+    def violations(row: String, key: Seq[String], df: DataFrame) = {
+      val initial = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      initial.collectFirst {
+        case j: BaseJoinExec if names(j.leftKeys).take(key.size) == key => j
+      } match {
+        case None => Seq(s"$row: no join on $key:\n$initial")
+        case Some(join) =>
+          val sides = join.children.flatMap { side =>
+            val ex = side.collect { case e: ShuffleExchangeExec => e }
+            val numbered = ex.size == 1 &&
+              ex.head.shuffleOrigin == REPARTITION_BY_NUM &&
+              hashKey(ex.head) == key && {
+                val below = ex.head.child
+                below.collect { case s: RDDScanExec => s }.size == 1 &&
+                below.collect { case e: Exchange => e }.isEmpty &&
+                below.collect { case j: BaseJoinExec => j }.isEmpty
+              }
+            if (numbered) Nil
+            else Seq(s"$row: a join side is not one numbered exchange on " +
+              s"$key over the key rows:\n$side")
+          }
+          val ensure = join.collect {
+            case e: ShuffleExchangeExec
+              if e.shuffleOrigin == ENSURE_REQUIREMENTS &&
+                hashKey(e).intersect(key).nonEmpty => e
+          }
+          sides ++ (if (ensure.isEmpty) Nil else Seq(s"$row: " +
+            s"ENSURE_REQUIREMENTS exchange on $key under the join:\n$join"))
+      }
+    }
+    val found = rows.flatMap { case (row, key, build) =>
+      violations(row, key, build()) }
+    assert(found.isEmpty, found.mkString("\n\n"))
+  }
+
   test("tf_idf: scans prune to (doc_id, text); the count branch reads zero columns") {
     val p = plan(operators.TextQueries.tfIdf(spark, dir))
     assert(!p.contains("n_chars") && !p.contains("source"),

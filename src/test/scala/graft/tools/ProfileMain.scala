@@ -25,7 +25,7 @@ object ProfileMain {
     spark.range(1000).agg(sum(col("id"))).collect()
 
     import org.apache.spark.sql.{DataFrame, SparkSession => SS}
-    import graft.operators.DedupOps
+    import graft.operators.{CandidatePairs, DedupOps}
     def mhDocs(s: SS, d: String) = graft.sources.Tables.load(s, d, "documents")
 
     def mhAggVariant(s: SS, d: String,
@@ -47,33 +47,11 @@ object ProfileMain {
     // ad-hoc plan fragments for dissecting slow queries
     val adhoc: Map[String, (SS, String) => DataFrame] = Map(
       "mh_sigs" -> ((s, d) => DedupOps.minhashSignatures(mhDocs(s, d))),
-      "mh_cands" -> ((s, d) => {
-        val sigs = DedupOps.minhashSignatures(mhDocs(s, d))
-        val banded = DedupOps.lshBands(sigs, 32, 8)
-        banded.as("x").join(banded.as("y"),
-          col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-            col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"))
-          .distinct()
-      }),
+      "mh_cands" -> ((s, d) => CandidatePairs.selfJoin(DedupOps.lshBands(
+        DedupOps.minhashSignatures(mhDocs(s, d)), 32, 8), Seq("band", "bh"))),
       "mh_pairs" -> ((s, d) => DedupOps.minhashPairs(mhDocs(s, d))),
-      "mh_cands1r" -> ((s, d) => {
-        val sigs = DedupOps.minhashSignatures(mhDocs(s, d))
-        val banded = DedupOps.lshBands(sigs, 32, 32)
-        banded.as("x").join(banded.as("y"),
-          col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-            col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"))
-          .distinct()
-      }),
-      "mh_prepairs1r" -> ((s, d) => {
-        val sigs = DedupOps.minhashSignatures(mhDocs(s, d))
-        val banded = DedupOps.lshBands(sigs, 32, 32)
-        banded.as("x").join(banded.as("y"),
-          col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-            col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"))
-      }),
+      "mh_cands1r" -> ((s, d) => CandidatePairs.selfJoin(DedupOps.lshBands(
+        DedupOps.minhashSignatures(mhDocs(s, d)), 32, 32), Seq("band", "bh"))),
       "mh_explode" -> ((s, d) => mhDocs(s, d)
         .select(col("doc_id"), DedupOps.tokenHashes(col("text")).as("th"))
         .select(col("doc_id"),
@@ -95,17 +73,11 @@ object ProfileMain {
         array_distinct(DedupOps.tokenHashes(col("text"))), 32)
         .groupBy().count()),
       "dj_cands" -> ((s, d) => {
-        val dd = mhDocs(s, d).select(col("doc_id"), col("lang"), col("source"))
+        val block = Seq("lang", "source")
         val sigs = DedupOps.minhashSignaturesFromSets(mhDocs(s, d),
-          array_distinct(DedupOps.tokenHashes(col("text"))), 32)
-        val banded = DedupOps.lshBands(sigs, 32, 16).join(dd, Seq("doc_id"))
-        banded.as("x").join(banded.as("y"),
-          col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-            col("x.lang") === col("y.lang") &&
-            col("x.source") === col("y.source") &&
-            col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"))
-          .distinct()
+          array_distinct(DedupOps.tokenHashes(col("text"))), 32, block)
+        CandidatePairs.selfJoin(DedupOps.lshBands(sigs, 32, 16, block),
+          Seq("band", "bh"), block = block)
       }))
 
     names.foreach { rawName =>
